@@ -9,14 +9,19 @@ writes are submitted together — later jobs' tasks back-fill executors
 freed by the earlier jobs' tails.
 
 Only use for actions with NO data dependency on each other.  Job
-descriptions are thread-local, so each submitted action labels itself
-correctly in the UI.
+groups and descriptions are thread-local Spark properties: each thunk
+starts with a copy of the caller's (``inheritable_thread_target``), so
+its jobs stay in the caller's group and may relabel themselves without
+touching the caller.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
+
+from pyspark import inheritable_thread_target
+from pyspark.sql import SparkSession
 
 
 def observed_count(obs, key: str = "n") -> int:
@@ -36,10 +41,18 @@ def observed_count(obs, key: str = "n") -> int:
 def run_jobs(*thunks: Callable[[], object]) -> list[object]:
     """Run the given zero-arg actions concurrently; return their
     results in argument order.  Exceptions propagate (the first one
-    raised by result order).  With one thunk, runs inline — no pool.
+    raised by result order), after every thunk has finished.  With one
+    thunk, runs inline — no pool.  Pool threads inherit the caller's
+    job group, description and session tags.
     """
     if len(thunks) == 1:
         return [thunks[0]()]
+    # active(), not getActiveSession(): the latter is None on threads
+    # the caller started itself.  One wrapper per thunk: each captures
+    # its own copy of the properties, so a thread that relabels its
+    # jobs does not relabel its siblings'.
+    session = SparkSession.active()
+    thunks = tuple(inheritable_thread_target(session)(t) for t in thunks)
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
         futures = [pool.submit(t) for t in thunks]
         return [f.result() for f in futures]

@@ -184,11 +184,6 @@ def price_qty_sum(price: Column | str, qty: Column | str) -> Column:
     return exact_sum(price_qty_e2(price, qty)) / 1e2
 
 
-def sql_price_qty_sum(price: str, qty: str) -> str:
-    """SQL twin of :func:`price_qty_sum`."""
-    return f"({sql_exact_sum(sql_price_qty_e2(price, qty))} / 1e2)"
-
-
 def int_avg(col: Column | str) -> Column:
     """Order-independent AVG of an integer-valued column (exact integer
     sum / count) — Spark's AVG over integral types accumulates in

@@ -12,16 +12,24 @@ Implementation notes:
   aggregate pass (single job); the duplicate check is a second pass
   (groupBy-all-columns count — the distributed version of pandas
   ``df.duplicated().any()``, data_quality.py:22).
-- Everything returns plain Python values; callers assemble the report.
-  These are actions (they execute the plan) — the pipeline calls them
-  once per layer like the reference's DAG task.
+- The per-check functions return plain Python values and are actions
+  (each executes the plan).
+- The gold verdict needs no action of its own: ``GOLD_RULES`` become
+  one list of aggregate columns per table (``gold_dq_columns``: rows,
+  per-column null cells, the minimum of each non-negative column; the
+  cardinality cap is ``rows <= max_rows``).  The pipeline attaches them
+  to each gold write as an ``Observation`` (``observe_gold``), so the
+  metrics arrive with the write job and ``observed_dq_report`` builds
+  the report without running a job.  ``run_data_quality_checks`` runs
+  the same columns as one ``agg`` per gold table for DataFrames that
+  are not being written.
 """
 
 from __future__ import annotations
 
 from typing import Any
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -99,33 +107,92 @@ GOLD_RULES: dict[str, dict[str, Any]] = {
 }
 
 
+def gold_dq_columns(table: str, columns: list[str]) -> list[Column]:
+    """``GOLD_RULES[table]`` as aggregate columns over a table with
+    ``columns``: ``rows``, ``nulls_<col>`` per column and ``min_<col>``
+    per non-negative rule column present (Q1, Q3, Q8; Q9 is
+    ``rows <= max_rows``)."""
+    rules = GOLD_RULES.get(table, {})
+    return (
+        [F.count(F.lit(1)).alias("rows")]
+        + [F.count_if(F.col(c).isNull()).alias(f"nulls_{c}") for c in columns]
+        + [
+            F.min(c).alias(f"min_{c}")
+            for c in rules.get("non_negative", [])
+            if c in columns
+        ]
+    )
+
+
+def gold_table_dq(
+    table: str, columns: list[str], values: dict[str, Any]
+) -> dict[str, Any]:
+    """One gold table's report entry from the values of its
+    ``gold_dq_columns``."""
+    rules = GOLD_RULES.get(table, {})
+    rows = values["rows"]
+    checks = [rows > 0]
+    checks += [
+        values[f"min_{c}"] is None or values[f"min_{c}"] >= 0
+        for c in rules.get("non_negative", [])
+        if c in columns
+    ]
+    if "max_rows" in rules:
+        checks.append(rows <= rules["max_rows"])
+    return {
+        "row_count": rows,
+        "column_count": len(columns),
+        "null_cells": sum(values[f"nulls_{c}"] for c in columns),
+        "passed": all(checks),
+    }
+
+
+def observe_gold(table: str, df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` carrying its gold DQ columns as an Observation: the first
+    action on the returned DataFrame (the table's write) fills it."""
+    obs = Observation()
+    return df.observe(obs, *gold_dq_columns(table, df.columns)), obs
+
+
+def observed_dq_report(
+    observed: dict[str, tuple[list[str], Observation]],
+) -> dict[str, Any]:
+    """The gold report from observations whose actions have run
+    (``{table: (columns, observation)}``); starts no Spark job."""
+    return _rollup(
+        {
+            f"gold.{name}": gold_table_dq(name, cols, obs.get)
+            for name, (cols, obs) in observed.items()
+        }
+    )
+
+
+def _rollup(tables: dict[str, dict[str, Any]]) -> dict[str, Any]:
+    return {
+        "tables": tables,
+        "all_passed": all(rep["passed"] for rep in tables.values()),
+    }
+
+
 def run_data_quality_checks(
     gold_tables: dict[str, DataFrame],
     silver_tables: dict[str, DataFrame] | None = None,
 ) -> dict[str, Any]:
     """Q10: the pass/warn rollup per table (reference
-    run_data_quality_checks, data_quality.py:122-155)."""
-    report: dict[str, Any] = {"tables": {}, "all_passed": True}
+    run_data_quality_checks, data_quality.py:122-155).  One action per
+    gold table (its ``gold_dq_columns``); silver tables add their
+    duplicate and partitioning checks."""
+    tables: dict[str, dict[str, Any]] = {}
     for name, df in (silver_tables or {}).items():
         rep = table_report(df)
         rep["duplicate_rows"] = duplicate_row_count(df)
         rep["date_partitioned"] = is_date_partitioned(df)
         rep["passed"] = rep["row_count"] > 0
-        report["tables"][f"silver.{name}"] = rep
-        report["all_passed"] &= rep["passed"]
+        tables[f"silver.{name}"] = rep
     for name, df in gold_tables.items():
-        rep = table_report(df)
-        rules = GOLD_RULES.get(name, {})
-        checks = [rep["row_count"] > 0]
-        for col in rules.get("non_negative", []):
-            checks.append(column_non_negative(df, col))
-        if "max_rows" in rules:
-            checks.append(cardinality_at_most(df, rules["max_rows"]))
-        rep["passed"] = all(checks)
-        report["tables"][f"gold.{name}"] = rep
-        report["all_passed"] &= rep["passed"]
-    report["all_passed"] = bool(report["all_passed"])
-    return report
+        values = df.agg(*gold_dq_columns(name, df.columns)).first().asDict()
+        tables[f"gold.{name}"] = gold_table_dq(name, df.columns, values)
+    return _rollup(tables)
 
 
 def table_profile(df: DataFrame, columns: list[str] | None = None) -> DataFrame:

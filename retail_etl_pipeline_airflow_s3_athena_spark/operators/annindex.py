@@ -222,21 +222,6 @@ def write_ann_index(
     }
 
 
-def _labelled_count(
-    spark: SparkSession, table: str, schema: str, path: str
-) -> DataFrame:
-    """(t, n) single-row count of one persisted index table, labelled
-    so several can union into ONE receipt job.  groupBy over a literal
-    yields no row for an empty table — callers default missing keys
-    to 0."""
-    return (
-        spark.read.schema(schema)
-        .parquet(f"{path}/{table}")
-        .groupBy(F.lit(table).alias("t"))
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
 def _read_coarse(spark: SparkSession, path: str, dim: int) -> DataFrame:
     """(label, cv, cnrm) reassembled from the persisted centroids."""
     return _reassemble_vec(

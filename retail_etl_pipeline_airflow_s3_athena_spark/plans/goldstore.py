@@ -236,10 +236,6 @@ def compact_gold_daily(spark: SparkSession, path: str) -> dict:
     return compact_gold_partials(spark, path, "sale_date", _DAILY_PARTIALS)
 
 
-def compact_gold_spend(spark: SparkSession, path: str) -> dict:
-    return compact_gold_partials(spark, path, "customer_id", _SPEND_PARTIALS)
-
-
 # ---------------------------------------------------------------------------
 # Product-performance store: the AVG-shaped final
 # ---------------------------------------------------------------------------

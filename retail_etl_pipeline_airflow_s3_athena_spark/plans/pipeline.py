@@ -3,8 +3,16 @@
 The reference's 9-task Airflow DAG collapses into one driver program
 (SURVEY.md §3.1): extract (read fixtures / JDBC) -> silver (clean +
 partitioned write) -> gold (lazy aggregation plans + write + register)
--> quality (actions) -> analytics (spark.sql).  Tasks share state via
-the catalog / filesystem paths, exactly like the reference's volume.
+-> quality -> analytics (spark.sql).  Tasks share state via the
+catalog / filesystem paths, exactly like the reference's volume.
+
+With a ``work_dir`` each layer costs its writes and nothing more: the
+six silver writes, then the four gold writes, are submitted together
+(``functions.jobs.run_jobs``); the gold DQ metrics are observed on the
+gold writes themselves (``quality.observe_gold``), so the quality step
+runs no job; and the read-backs pass the schema just written, so they
+run no schema-inference job.  Without one, quality runs one aggregate
+per gold table.
 
 Airflow-isms that don't port: retries (leave to the embedding
 scheduler), XCom (plain return values), the S3 upload task (write to
@@ -14,11 +22,12 @@ s3a:// directly).
 from __future__ import annotations
 
 import datetime as _dt
+from functools import partial
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
-from retail_etl_pipeline_airflow_s3_athena_spark.functions import quality
+from retail_etl_pipeline_airflow_s3_athena_spark.functions import jobs, quality
 from retail_etl_pipeline_airflow_s3_athena_spark.plans import (
     analytics,
     gold,
@@ -61,12 +70,17 @@ def run_pipeline(
         "region": silver.clean(spark.read.parquet(f"{source_dir}/region.parquet")),
     }
     if work_dir:
-        for name, df in silver_tables.items():
-            writers.write_silver(df, f"{work_dir}/silver", name, run_date)
+        silver_dir = f"{work_dir}/silver"
+        jobs.run_jobs(
+            *(
+                partial(writers.write_silver, df, silver_dir, name, run_date)
+                for name, df in silver_tables.items()
+            )
+        )
         # read back through the partition-discovering source (S6)
         silver_tables = {
-            name: readers.read_parquet_table(spark, f"{work_dir}/silver", name)
-            for name in silver_tables
+            name: readers.read_parquet_table(spark, silver_dir, name, df.schema)
+            for name, df in silver_tables.items()
         }
         st = silver_tables["sale_transactions"].drop("date")
         cust = silver_tables["customers"].drop("date")
@@ -90,14 +104,27 @@ def run_pipeline(
         "store_performance": gold.store_performance(st, strs),
     }
     if work_dir:
-        for name, df in gold_tables.items():
-            writers.write_gold(df, f"{work_dir}/gold", name)
-        gold_tables = {
-            name: readers.read_parquet_table(spark, f"{work_dir}/gold", name)
-            for name in gold_tables
+        gold_dir = f"{work_dir}/gold"
+        observed = {
+            name: quality.observe_gold(name, df) for name, df in gold_tables.items()
         }
+        jobs.run_jobs(
+            *(
+                partial(writers.write_gold, df, gold_dir, name)
+                for name, (df, _) in observed.items()
+            )
+        )
+        report = quality.observed_dq_report(
+            {name: (df.columns, obs) for name, (df, obs) in observed.items()}
+        )
+        gold_tables = {
+            name: readers.read_parquet_table(spark, gold_dir, name, df.schema)
+            for name, df in gold_tables.items()
+        }
+    else:
+        report = quality.run_data_quality_checks(gold_tables)
 
-    # --- register + quality + analytics ----------------------------------
+    # --- register + analytics --------------------------------------------
     for name, df in gold_tables.items():
         df.createOrReplaceTempView(name)
     # base retail views for queries that hit the silver surface directly
@@ -105,7 +132,6 @@ def run_pipeline(
     cust.createOrReplaceTempView("customers")
     prod.createOrReplaceTempView("products")
     strs.createOrReplaceTempView("stores")
-    report = quality.run_data_quality_checks(gold_tables)
     analytics_results = {
         name: spark.sql(sql) for name, sql in analytics.ANALYTICS_SQL.items()
     }

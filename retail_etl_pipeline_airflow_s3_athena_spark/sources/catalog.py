@@ -38,17 +38,22 @@ def register_parquet_table(
 
     Schema and partitions are discovered from the files themselves —
     Spark's replacement for both the hard-coded column lists (S12) and
-    the Glue crawler (S13)."""
-    spark.sql(f"DROP TABLE IF EXISTS {database}.{table}")
-    partition_clause = (
-        f"PARTITIONED BY ({', '.join(partition_keys)}) " if partition_keys else ""
-    )
-    spark.sql(
-        f"CREATE TABLE {database}.{table} USING PARQUET "
-        f"{partition_clause}LOCATION '{path}'"
-    )
+    the Glue crawler (S13).  ``partition_keys`` names the Hive
+    partition columns the location must have: Spark refuses a
+    ``PARTITIONED BY`` clause on an inferred-schema table, so the keys
+    are checked against the inferred ones instead (ValueError on a
+    mismatch, leaving no table behind) and the partitions recovered."""
+    name = f"{database}.{table}"
+    spark.sql(f"DROP TABLE IF EXISTS {name}")
+    spark.sql(f"CREATE TABLE {name} USING PARQUET LOCATION '{path}'")
     if partition_keys:
-        spark.sql(f"MSCK REPAIR TABLE {database}.{table}")
+        found = [c.name for c in spark.catalog.listColumns(name) if c.isPartition]
+        if found != list(partition_keys):
+            spark.sql(f"DROP TABLE {name}")
+            raise ValueError(
+                f"{path} is partitioned by {found}, not {list(partition_keys)}"
+            )
+        spark.catalog.recoverPartitions(name)
 
 
 def write_bucketed_table(
@@ -84,12 +89,6 @@ def write_bucketed_table(
         .format("parquet")
         .saveAsTable(name)
     )
-
-
-def register_temp_view(df: DataFrame, name: str) -> None:
-    """Session-scoped registration — the in-process fast path used by
-    tests and the analytics layer."""
-    df.createOrReplaceTempView(name)
 
 
 def bucketed_segment_order_stats(

@@ -24,11 +24,25 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def read_parquet_table(spark: SparkSession, base_dir: str, table: str) -> DataFrame:
+def read_parquet_table(
+    spark: SparkSession,
+    base_dir: str,
+    table: str,
+    schema: T.StructType | None = None,
+) -> DataFrame:
     """Read one logical table from a layer directory — replaces the
     reference's glob('**/*.parquet') + filename-prefix grouping +
-    pd.concat (scripts/load.py:56-111, S6+S8+SET1)."""
-    return spark.read.parquet(f"{base_dir}/{table}")
+    pd.concat (scripts/load.py:56-111, S6+S8+SET1).
+
+    Without ``schema`` Spark infers it from the parquet footers, which
+    costs one job per read.  A writer that reads back what it just
+    wrote passes the written schema instead: no inference job, and
+    Hive ``date=`` partition columns are still discovered from the
+    paths."""
+    reader = spark.read
+    if schema is not None:
+        reader = reader.schema(schema)
+    return reader.parquet(f"{base_dir}/{table}")
 
 
 def read_bronze_csv(

@@ -1,17 +1,64 @@
 """End-to-end pipeline (reference DAG semantics), sources/sinks,
-catalog registration, column guards, quality checks."""
+catalog registration, column guards, quality checks, concurrent job
+submission."""
 
 from __future__ import annotations
 
+import os
 import tempfile
+import threading
 
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from retail_etl_pipeline_airflow_s3_athena_spark.functions import quality
+from retail_etl_pipeline_airflow_s3_athena_spark.functions import jobs, quality
 from retail_etl_pipeline_airflow_s3_athena_spark.plans import gold, retail_views, silver
 from retail_etl_pipeline_airflow_s3_athena_spark.plans.pipeline import run_pipeline
 from retail_etl_pipeline_airflow_s3_athena_spark.sources import catalog, readers, writers
+
+
+GOLD = ["daily_sales_summary", "top_customers", "product_performance",
+        "store_performance"]
+
+
+def _fixture_dir(tmp_path, sf_dir, lineitem) -> str:
+    """A copy of ``sf_dir`` whose lineitem table is ``lineitem``
+    (a pyarrow Table); every other table is linked."""
+    out = tmp_path / "src"
+    out.mkdir()
+    pq.write_table(lineitem, out / "lineitem.parquet")
+    for name in os.listdir(sf_dir):
+        if name != "lineitem.parquet":
+            os.symlink(os.path.join(sf_dir, name), out / name)
+    return str(out)
+
+
+def _per_check_report(gold_tables) -> dict:
+    """The gold report rebuilt from the one-action-per-check functions."""
+    tables = {}
+    for name, df in gold_tables.items():
+        rules = quality.GOLD_RULES[name]
+        rep = quality.table_report(df)
+        checks = [rep["row_count"] > 0]
+        checks += [quality.column_non_negative(df, c) for c in rules["non_negative"]]
+        if "max_rows" in rules:
+            checks.append(quality.cardinality_at_most(df, rules["max_rows"]))
+        rep["passed"] = all(checks)
+        tables[f"gold.{name}"] = rep
+    return {"tables": tables,
+            "all_passed": all(t["passed"] for t in tables.values())}
+
+
+def _pipeline_reports(spark, source_dir, work_dir):
+    """(observed report, DataFrame-path report on the read-backs,
+    per-check report on the read-backs) of one pipeline run."""
+    out = run_pipeline(spark, source_dir, work_dir=work_dir, run_date="20260101")
+    back = {name: readers.read_parquet_table(spark, f"{work_dir}/gold", name)
+            for name in GOLD}
+    return (out["quality"], quality.run_data_quality_checks(back),
+            _per_check_report(back))
 
 
 def test_run_pipeline_in_memory(spark, sf_dir):
@@ -24,6 +71,7 @@ def test_run_pipeline_in_memory(spark, sf_dir):
         "store_performance",
     }
     assert all(df.count() > 0 for df in out["analytics"].values())
+    assert out["quality"] == _per_check_report(out["gold"])
 
 
 def test_run_pipeline_with_writes_and_readback(spark, sf_dir):
@@ -34,7 +82,15 @@ def test_run_pipeline_with_writes_and_readback(spark, sf_dir):
     assert quality.is_date_partitioned(sil)
     # write–read-back verification (reference transform.py:63-64)
     assert sil.count() == 6000
+    # the read-backs given the written schema read what inference reads
+    assert spark.table("sale_transactions").schema == sil.drop("date").schema
+    for name, df in out["gold"].items():
+        assert df.schema == readers.read_parquet_table(spark, f"{work}/gold", name).schema
+    # the DQ report observed on the gold writes equals the DataFrame
+    # path's and the per-check functions' on the read-backs
     assert out["quality"]["all_passed"]
+    assert out["quality"] == quality.run_data_quality_checks(out["gold"])
+    assert out["quality"] == _per_check_report(out["gold"])
     # append mode: a second run adds a new date partition
     run_pipeline(spark, sf_dir, work_dir=work, run_date="20260814")
     sil2 = readers.read_parquet_table(spark, f"{work}/silver", "sale_transactions")
@@ -79,6 +135,26 @@ def test_catalog_registration(spark, sf_dir):
     catalog.register_parquet_table(
         spark, "shopease_analytics", "daily_sales_summary", path
     )
+
+
+def test_register_partitioned_silver_table(spark, sf_dir, tmp_path):
+    cust = retail_views.customers(spark, sf_dir)
+    for day in ("20260101", "20260102"):
+        writers.write_silver(cust, str(tmp_path), "customers", day)
+    catalog.create_database(spark, "dq_silver")
+    catalog.register_parquet_table(
+        spark, "dq_silver", "customers", f"{tmp_path}/customers",
+        partition_keys=["date"])
+    got = spark.sql(
+        "SELECT date, COUNT(*) AS n FROM dq_silver.customers GROUP BY date"
+    ).collect()
+    assert sorted((r["date"], r["n"]) for r in got) == [
+        (20260101, cust.count()), (20260102, cust.count())]
+    with pytest.raises(ValueError, match="partitioned by"):
+        catalog.register_parquet_table(
+            spark, "dq_silver", "customers_bad", f"{tmp_path}/customers",
+            partition_keys=["region"])
+    assert not spark.catalog.tableExists("dq_silver.customers_bad")
 
 
 def test_bronze_csv_roundtrip(spark, sf_dir):
@@ -328,6 +404,121 @@ def test_quality_suite_full(spark, sf_dir):
     assert quality.duplicate_row_count(cust) == 0
     dup = cust.limit(1).unionAll(cust.limit(1))
     assert quality.duplicate_row_count(dup) == 1
+
+
+def test_dirty_input_fails_store_performance(spark, sf_dir, tmp_path):
+    # every line of one supplier (the retail "store") carries a refund
+    # price, so that store's total_revenue is negative
+    li = pq.read_table(f"{sf_dir}/lineitem.parquet")
+    refund = pc.equal(li["l_suppkey"], 3)
+    li = li.set_column(
+        li.schema.get_field_index("l_extendedprice"), "l_extendedprice",
+        pc.if_else(refund, pc.negate(li["l_extendedprice"]), li["l_extendedprice"]))
+    src = _fixture_dir(tmp_path, sf_dir, li)
+    observed, agg, per_check = _pipeline_reports(spark, src, str(tmp_path / "work"))
+    assert observed == agg == per_check
+    assert not observed["all_passed"]
+    assert not observed["tables"]["gold.store_performance"]["passed"]
+
+
+def test_empty_fact_table(spark, sf_dir, tmp_path):
+    li = pq.read_table(f"{sf_dir}/lineitem.parquet").slice(0, 0)
+    src = _fixture_dir(tmp_path, sf_dir, li)
+    observed, agg, per_check = _pipeline_reports(spark, src, str(tmp_path / "work"))
+    assert observed == agg == per_check
+    assert not observed["all_passed"]
+    for name in GOLD:
+        assert observed["tables"][f"gold.{name}"]["row_count"] == 0
+        assert not observed["tables"][f"gold.{name}"]["passed"]
+
+
+def test_observation_on_empty_write_does_not_hang(spark, sf_dir, tmp_path):
+    st = silver.clean(retail_views.sale_transactions(spark, sf_dir)).limit(0)
+    df, obs = quality.observe_gold("daily_sales_summary",
+                                   gold.daily_sales_summary(st))
+    writers.write_gold(df, str(tmp_path), "daily_sales_summary")
+    values = {}
+    getter = threading.Thread(target=lambda: values.update(obs.get), daemon=True)
+    getter.start()
+    getter.join(timeout=120)
+    assert not getter.is_alive()
+    assert values["rows"] == 0
+    mins = {k: v for k, v in values.items() if k.startswith("min_")}
+    assert set(mins) == {"min_revenue", "min_total_orders", "min_total_items"}
+    assert all(v is None for v in mins.values())
+
+
+def _jobs_in_group(spark, group: str, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_dq_job_budget(spark, sf_dir, tmp_path):
+    """Building the report from observed metrics starts no job; the
+    DataFrame path runs one action per gold table."""
+    st = silver.clean(retail_views.sale_transactions(spark, sf_dir))
+    built = gold.build_gold_tables(
+        st, retail_views.customers(spark, sf_dir),
+        retail_views.products(spark, sf_dir), retail_views.stores(spark, sf_dir))
+    observed = {name: quality.observe_gold(name, df) for name, df in built.items()}
+    for name, (df, _) in observed.items():
+        writers.write_gold(df, str(tmp_path), name)
+    report, n = _jobs_in_group(spark, "dq_observed", lambda: quality.observed_dq_report(
+        {name: (df.columns, obs) for name, (df, obs) in observed.items()}))
+    assert n == 0
+    back = {name: readers.read_parquet_table(spark, str(tmp_path), name)
+            for name in built}
+    # jobs one aggregate action over one read-back table starts
+    _, per_action = _jobs_in_group(
+        spark, "dq_one_action",
+        lambda: back["top_customers"].agg(F.count(F.lit(1))).first())
+    agg_report, n = _jobs_in_group(spark, "dq_dataframes",
+                                   lambda: quality.run_data_quality_checks(back))
+    assert n == per_action * len(back)
+    assert agg_report == report
+
+
+def test_run_jobs_keeps_the_callers_job_group(spark):
+    tracker = spark.sparkContext.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    counts, n = _jobs_in_group(spark, "run_jobs_group", lambda: jobs.run_jobs(
+        *(lambda i=i: spark.range(i + 1).count() for i in range(3))))
+    assert counts == [1, 2, 3]
+    assert n >= 3
+    # no job started by the pool threads ran outside the group
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
+
+    # a thunk that relabels its jobs relabels only its own
+    barrier = threading.Barrier(3)
+
+    def own_group(i):
+        spark.sparkContext.setJobGroup(f"run_jobs_own_{i}", "own")
+        barrier.wait(timeout=60)
+        return spark.range(1).count()
+
+    _jobs_in_group(spark, "run_jobs_outer", lambda: jobs.run_jobs(
+        *(lambda i=i: own_group(i) for i in range(3))))
+    for i in range(3):
+        assert tracker.getJobIdsForGroup(f"run_jobs_own_{i}")
+
+    # called from a thread the caller started, too
+    def two_jobs():
+        return jobs.run_jobs(*(lambda i=i: spark.range(i + 1).count() for i in range(2)))
+
+    caller = threading.Thread(
+        target=_jobs_in_group, args=(spark, "run_jobs_in_thread", two_jobs),
+        daemon=True)
+    caller.start()
+    caller.join(timeout=120)
+    assert not caller.is_alive()
+    assert len(tracker.getJobIdsForGroup("run_jobs_in_thread")) >= 2
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
 
 
 def test_driver_gate_ordering_is_explicit():
